@@ -187,37 +187,3 @@ def find_bnode_mapping(
 def graphs_isomorphic(a: List[Triple], b: List[Triple]) -> bool:
     return find_bnode_mapping(a, b) is not None
 
-
-def precision_recall(
-    ours: List[Triple], golden: List[Triple]
-) -> Tuple[float, float]:
-    """Triple-level P/R with best-effort bnode alignment.
-
-    Isomorphic graphs score (1,1); otherwise bnodes are aligned by
-    refinement signature greedily and exact matches counted.
-    """
-    if graphs_isomorphic(ours, golden):
-        return (1.0, 1.0)
-    ta = [_norm(t) for t in ours]
-    tb = [_norm(t) for t in golden]
-    sig_a = _signature(ta)
-    sig_b = _signature(tb)
-    # greedy alignment by signature
-    by_sig: Dict[str, List[str]] = defaultdict(list)
-    for y in _bnodes_of(tb):
-        by_sig[sig_b[y]].append(y)
-    mapping: Dict[str, str] = {}
-    for x in _bnodes_of(ta):
-        pool = by_sig.get(sig_a[x])
-        if pool:
-            mapping[x] = pool.pop(0)
-    mapped = Counter()
-    for s, p, ok, olex, odt, olang, g in ta:
-        s2 = mapping.get(s, s) if _is_bnode(s) else s
-        olex2 = mapping.get("_:" + olex, "_:" + olex)[2:] if ok == 4 else olex
-        g2 = mapping.get(g, g) if _is_bnode(g) else g
-        mapped[(s2, p, ok, olex2, odt, olang, g2)] += 1
-    inter = sum((mapped & Counter(tb)).values())
-    p = inter / max(1, sum(mapped.values()))
-    r = inter / max(1, len(tb))
-    return (p, r)

@@ -15,13 +15,6 @@ from typing import Dict, List
 
 REF_TESTS = pathlib.Path("/root/reference/tests")
 
-BASE_URI_BY_SUITE = {
-    "turtle-2013": "http://www.w3.org/2013/TurtleTests/",
-    "trig-2013": "http://www.w3.org/2013/TriGTests/",
-    "ntriples-2013": "http://www.w3.org/2013/N-TriplesTests/",
-    "nquads-2013": "http://www.w3.org/2013/N-QuadsTests/",
-}
-
 
 def makefile_vars(suite: str) -> Dict[str, List[str]]:
     """Parse variable -> file list from a suite's Makefile.am."""
@@ -35,6 +28,3 @@ def makefile_vars(suite: str) -> Dict[str, List[str]]:
         out[name] = files
     return out
 
-
-def suite_base_uri(suite: str, filename: str) -> str:
-    return BASE_URI_BY_SUITE[suite] + filename

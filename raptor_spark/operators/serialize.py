@@ -21,8 +21,6 @@ Two paths, mirroring the reference's serializer split
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -40,6 +38,7 @@ _WRITERS = {
     "dot": K.to_dot,
     "html": K.to_html,
     "mkr": K.to_mkr,
+    "rdfxml-abbrev": K.to_rdfxml_abbrev,
 }
 
 
@@ -87,29 +86,6 @@ def _nt_line_fn(
                 parts.append(render_subjlike(g))
             vals[i] = " ".join(parts) + " ."
     return pd.Series(vals, dtype=object, index=subj.index)
-
-
-_nt_line_udf_cached = None
-
-
-def _nt_line_udf():
-    # created lazily: registering a pandas_udf at import time would break
-    # this module's import inside Python workers (no JVM gateway there)
-    global _nt_line_udf_cached
-    if _nt_line_udf_cached is None:
-        _nt_line_udf_cached = F.pandas_udf(_nt_line_fn, "string")
-    return _nt_line_udf_cached
-
-
-def nt_lines(triples: DataFrame, with_graph: bool = True):
-    """Canonical N-Triples/N-Quads line column (kernel path, all rows
-    through the Python writer). Kept for callers that need a single
-    column expression; the sink fast path is ``nt_lines_df``."""
-    g = F.col("graph") if with_graph else F.lit(None).cast("string")
-    return _nt_line_udf()(
-        F.col("subj"), F.col("pred"), F.col("obj_kind"), F.col("obj_lex"),
-        F.col("obj_datatype"), F.col("obj_lang"), g,
-    )
 
 
 # Fast-path eligibility: the columnar renderer handles exactly the rows
@@ -225,20 +201,16 @@ def nt_lines_df(
     )
     cl = F.col("_clean")
     gate = lambda c: F.when(~cl, c)  # null for clean rows
-    slow = _nt_line_udf()(
+    # built per call, never cached in a module global: a pandas UDF holds
+    # the accumulator server of the SparkContext that built it, so one
+    # reused under a later session in the same process fails its tasks
+    slow = F.pandas_udf(_nt_line_fn, "string")(
         gate(s), gate(p), gate(ok), gate(ol), gate(od), gate(og),
         gate(F.col("_g")),
     )
     return staged.select(
         *extras, F.when(cl, F.col("_fast")).otherwise(slow).alias("nt_line")
     )
-
-
-def write_ntriples(triples: DataFrame, path: str, with_graph: bool = True):
-    """Materialize the graph as N-Triples/N-Quads text files."""
-    nt_lines_df(triples, with_graph).withColumnRenamed(
-        "nt_line", "value"
-    ).write.mode("overwrite").text(path)
 
 
 _TRIPLE_STRUCT = ("subj", "pred", "obj_kind", "obj_lex", "obj_datatype",
@@ -260,16 +232,6 @@ def _grouped_triples(triples: DataFrame, group_col: str) -> DataFrame:
         .groupBy(group_col)
         .agg(F.collect_list("t").alias("ts"))
     )
-
-
-def _structs_to_triples(ts) -> list:
-    return [
-        Triple(
-            t["subj"], t["pred"], int(t["obj_kind"]), t["obj_lex"],
-            t["obj_datatype"], t["obj_lang"], t["graph"],
-        )
-        for t in ts
-    ]
 
 
 def _batch_triple_lists(rb):
@@ -384,10 +346,6 @@ def _roundtrip_count(doc: str, fmt: str) -> int:
     return -1 if errs else len(set(back))
 
 
-_RT_WRITERS = dict(_WRITERS)
-_RT_WRITERS["rdfxml-abbrev"] = K.to_rdfxml_abbrev
-
-
 def rss10_roundtrip_stats(
     triples: DataFrame, group_col: str = "conv_id"
 ) -> DataFrame:
@@ -440,7 +398,7 @@ def serialize_bytes(
     visible apart from the (roughly equal-cost) roundtrip harness."""
     import pyarrow as pa
 
-    writer = _RT_WRITERS[fmt]
+    writer = _WRITERS[fmt]
     return _writer_stage(
         triples,
         group_col,
@@ -459,7 +417,7 @@ def serialize_roundtrip_counts(
     the expected count per group."""
     import pyarrow as pa
 
-    writer = _RT_WRITERS[fmt]
+    writer = _WRITERS[fmt]
     return _writer_stage(
         triples,
         group_col,

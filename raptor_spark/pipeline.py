@@ -1,14 +1,20 @@
-"""End-to-end KG construction pipeline.
+"""End-to-end KG construction pipeline — the only module that builds the graph.
 
-transcripts --reassemble--> documents --parse UDF--> triples+errors
-          --canonicalize/relabel--> --salted dedup--> graph tables.
+transcripts --reassemble--> documents --parse UDF--> parsed rows
+          --split/relabel--> triples + errors --> graph tables.
 
-Exchanges: conv_id reassembly, plus the optional bucketed write — two in
-the default materialization path. Statement dedup is per-document inside
-the parse stage (the reference's own semantic), so it costs no shuffle;
-``global_dedup``/``salt_buckets`` add an explicit aggregation pass when
-cross-conversation uniqueness or forced two-phase skew handling is
-wanted. Everything between exchanges runs in whole-stage codegen or one
+Raptor's statement stream (parser -> statement handler -> sink) becomes two
+compositions every construction path shares: :func:`parse_transcripts`
+(reassembly, then the Arrow parse stage with per-document statement dedup)
+and :func:`split_parsed` (relabelled triples + parse errors).
+:func:`build_graph`, :func:`run_resumable` and the micro-batch body of
+``streaming.pipeline.stream_build_graph`` differ only in what they persist
+and where they write.
+
+Exchanges: conv_id reassembly, plus the bucketed write — two in the
+default materialization path. Statement dedup is per-document inside the
+parse stage (the reference's own semantic), so it costs no shuffle.
+Everything between exchanges runs in whole-stage codegen or one
 Arrow-batched Python stage. AQE is expected on (skew-join/coalesce).
 """
 
@@ -17,65 +23,62 @@ from __future__ import annotations
 from typing import Optional, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from raptor_spark.operators.canonical import dedup_statements, relabel_bnodes
+from raptor_spark.operators.canonical import relabel_bnodes
 from raptor_spark.operators.parse import errors_of, parse_documents, triples_of
 from raptor_spark.operators.reassemble import reassemble
 from raptor_spark.plans import checkpoint as ckpt
+
+
+def parse_transcripts(
+    transcripts: DataFrame,
+    base_uri_col: Optional[str] = None,
+    dedup: bool = True,
+) -> DataFrame:
+    """transcripts -> parsed rows (one conv_id reassembly, one Arrow parse
+    stage).
+
+    Statement dedup runs PER DOCUMENT INSIDE the parse stage: the whole
+    document is in hand there, and the Arrow parse stage reports
+    UnknownPartitioning downstream, so any post-parse dropDuplicates
+    would re-shuffle every triple even though the stream is
+    conv_id-clustered (CLAUDE.md rule; gated by tests/test_plan_shape.py).
+    This is also the reference's semantic (duplicate suppression is per
+    parsed document, src/raptor_abbrev.c:354-397); after relabeling,
+    bnode triples are globally unique by construction (labels embed
+    conv_id). ``operators.canonical.dedup_statements`` is the explicit
+    (salted, two-phase) aggregation for callers that need more."""
+    extra = ("tool",) + ((base_uri_col,) if base_uri_col else ())
+    docs = reassemble(transcripts, extra_cols=extra)
+    return parse_documents(docs, base_uri_col=base_uri_col, dedup_per_doc=dedup)
+
+
+def split_parsed(
+    parsed: DataFrame, relabel: bool = True
+) -> Tuple[DataFrame, DataFrame]:
+    """parsed rows -> (triples, parse_errors); ``relabel`` makes
+    document-scoped bnode labels globally unique (``_:C.x``)."""
+    triples = triples_of(parsed)
+    if relabel:
+        triples = relabel_bnodes(triples)
+    return triples, errors_of(parsed)
 
 
 def build_graph(
     transcripts: DataFrame,
     base_uri_col: Optional[str] = None,
     relabel: bool = True,
-    global_dedup: bool = False,
-    salt_buckets: int = 0,
     dedup: bool = True,
 ) -> Tuple[DataFrame, DataFrame]:
     """transcripts -> (triples, parse_errors).
 
-    ``dedup=False`` keeps the raw statement stream (the reference's
-    streaming parsers emit duplicates as-is; only the buffered abbrev
-    serializers dedup) — used when comparing against rapper output.
-
-    Statement dedup runs PER DOCUMENT INSIDE the parse stage, before
-    relabeling: the whole document is in hand there, and the Arrow
-    parse stage reports UnknownPartitioning downstream, so any
-    post-parse dropDuplicates would re-shuffle every triple even though
-    the stream is conv_id-clustered (CLAUDE.md rule; gated by
-    tests/test_plan_shape.py). This is also the reference's semantic
-    (duplicate suppression is per parsed document,
-    src/raptor_abbrev.c:354-397);
-    after relabeling, bnode triples are globally unique by construction
-    (labels embed conv_id). ``global_dedup=True`` adds a whole-graph
-    pass after relabeling — a full shuffle on the term columns — for
-    callers that need cross-conversation uniqueness of URI-only rows.
-    """
-    extra = ("tool",) + ((base_uri_col,) if base_uri_col else ())
-    docs = reassemble(transcripts, extra_cols=extra)
-    # per-document dedup happens inside the parse stage (the whole
-    # document is in hand there; the Arrow parse stage reports UnknownPartitioning
-    # downstream, so a dropDuplicates here would re-shuffle every triple
-    # even though the stream is already conv_id-clustered)
-    parsed = parse_documents(
-        docs, base_uri_col=base_uri_col,
-        dedup_per_doc=dedup and salt_buckets == 0,
+    ``relabel=False, dedup=False`` keeps document-local bnode labels and
+    the raw statement stream (the reference's streaming parsers emit
+    duplicates as-is; only the buffered abbrev serializers dedup) — the
+    mode used when comparing against rapper output."""
+    return split_parsed(
+        parse_transcripts(transcripts, base_uri_col, dedup), relabel
     )
-    triples = triples_of(parsed)
-    errors = errors_of(parsed)
-    if dedup and salt_buckets > 0:
-        # explicit salted two-phase aggregation (skew-forced path)
-        triples = dedup_statements(
-            triples, global_dedup=False, salt_buckets=salt_buckets
-        )
-    if relabel:
-        triples = relabel_bnodes(triples)
-    if dedup and global_dedup:
-        triples = dedup_statements(
-            triples, global_dedup=True, salt_buckets=salt_buckets
-        )
-    return triples, errors
 
 
 def run_resumable(
@@ -83,7 +86,6 @@ def run_resumable(
     transcripts: DataFrame,
     out_dir: str,
     n_buckets: int = 64,
-    base_uri_col: Optional[str] = None,
     entities: Optional[DataFrame] = None,
     bucket_fn=None,
 ) -> DataFrame:
@@ -96,7 +98,8 @@ def run_resumable(
     ``links/bucket=``; buckets finished by a PRIOR run without linking
     get a linking-only catch-up pass (ckpt.link_catchup), so a resume
     that adds entities never leaves links/ silently incomplete. Returns
-    the manifest rows appended by this run.
+    the manifest rows appended by this run. ``out_dir`` must be on the
+    local file system (ckpt.local_dir).
 
     The materialization fans into several write/aggregate jobs (triples,
     errors, links, manifest counters); the parse stage's output is
@@ -108,14 +111,9 @@ def run_resumable(
         spark, transcripts, out_dir, n_buckets, bucket_fn=bucket_fn
     )
     turns = todo.drop("bucket").persist(StorageLevel.MEMORY_AND_DISK)
-    extra = ("tool",) + ((base_uri_col,) if base_uri_col else ())
-    docs = reassemble(turns, extra_cols=extra)
-    parsed = parse_documents(
-        docs, base_uri_col=base_uri_col, dedup_per_doc=True
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    parsed = parse_transcripts(turns).persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        triples = relabel_bnodes(triples_of(parsed))
-        errors = errors_of(parsed)
+        triples, errors = split_parsed(parsed)
         links = None
         if entities is not None:
             from raptor_spark.operators.link import link_entities

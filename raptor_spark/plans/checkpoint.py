@@ -13,7 +13,9 @@ the reference has no equivalent — it is a single-process stream).
 from __future__ import annotations
 
 import os
-from typing import List, Optional
+import shutil
+from typing import Optional
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -24,19 +26,45 @@ except ImportError:  # pragma: no cover
     from pyspark.sql.utils import AnalysisException
 
 
-def with_bucket(
-    df: DataFrame, n_buckets: int, col: str = "conv_id", bucket_fn=None
-) -> DataFrame:
+def local_dir(out_dir: str) -> str:
+    """The local file-system path of a checkpoint ``out_dir`` (a plain
+    path or a ``file:`` URI). Resume reads the manifest's existence and
+    the pre-clear deletes bucket directories through the local file
+    system, so any other scheme (``s3a://``, ``hdfs://`` ...) would read
+    as "nothing finished" and silently skip the pre-clear: refuse it
+    before any Spark job runs."""
+    u = urlparse(out_dir)
+    if u.scheme == "":
+        return out_dir
+    if u.scheme == "file" and u.netloc in ("", "localhost"):
+        return u.path
+    raise ValueError(
+        "checkpoint out_dir must be a local path or file: URI, got %r"
+        % out_dir
+    )
+
+
+def with_bucket(df: DataFrame, n_buckets: int, bucket_fn=None) -> DataFrame:
     """Deterministic conv_id -> bucket assignment. Default is xxhash64
     (cheap, JVM-side, well-mixed at 10^12 keys); ``bucket_fn(col_expr,
     n_buckets) -> Column`` overrides it — e.g. an md5-derived bucket the
     DuckDB oracle can reconstruct relationally (queries.resumable_manifest).
     The resume machinery only needs determinism across runs."""
     if bucket_fn is None:
-        expr = F.pmod(F.xxhash64(F.col(col)), F.lit(n_buckets)).cast("int")
+        expr = F.pmod(F.xxhash64(F.col("conv_id")), F.lit(n_buckets)).cast("int")
     else:
-        expr = bucket_fn(F.col(col), n_buckets)
+        expr = bucket_fn(F.col("conv_id"), n_buckets)
     return df.withColumn("bucket", expr)
+
+
+def overwrite_partitions(df: DataFrame, path: str, col: str) -> None:
+    """Write ``df`` as parquet partitioned by ``col``, replacing exactly the
+    partitions it carries (dynamic partition overwrite): a replay of the
+    same buckets / micro-batch re-lands them instead of appending a
+    duplicate copy, and every other partition is left alone."""
+    df.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy(col).parquet(path)
 
 
 def finished_buckets(spark: SparkSession, out_dir: str) -> Optional[DataFrame]:
@@ -50,11 +78,12 @@ def finished_buckets(spark: SparkSession, out_dir: str) -> Optional[DataFrame]:
     treated as linked only when decisions were recorded (re-linking a
     zero-decision bucket is append-idempotent: it writes no link rows).
     """
-    manifest_path = os.path.join(out_dir, "manifest")
-    if not os.path.isdir(manifest_path):
+    if not os.path.isdir(os.path.join(local_dir(out_dir), "manifest")):
         return None
     try:
-        df = spark.read.option("mergeSchema", "true").parquet(manifest_path)
+        df = spark.read.option("mergeSchema", "true").parquet(
+            os.path.join(out_dir, "manifest")
+        )
     except AnalysisException:
         # a manifest dir with no readable parquet yet (run died before
         # the first manifest append) IS "nothing finished"; any OTHER
@@ -95,7 +124,7 @@ def write_bucketed(
     errors: DataFrame,
     out_dir: str,
     n_buckets: int,
-    turns: Optional[DataFrame] = None,
+    turns: DataFrame,
     links: Optional[DataFrame] = None,
     bucket_fn=None,
 ) -> DataFrame:
@@ -104,9 +133,10 @@ def write_bucketed(
 
     Returns the manifest DataFrame — the north-rule lineage counters per
     bucket: conversations, turns parsed, triples emitted, parse errors,
-    link decisions.  ``turns`` is the transcript turn table (counted per
-    bucket); ``links`` is the (conv_id, entity_uri, mentions) linking
-    output, materialized under ``links/bucket=`` alongside the triples.
+    link decisions.  ``turns`` is the transcript turn table the run
+    consumed (conversations and turns are counted from it per bucket);
+    ``links`` is the (conv_id, entity_uri, mentions) linking output,
+    materialized under ``links/bucket=`` alongside the triples.
 
     Bucket data writes use DYNAMIC partition overwrite, not append: a
     run only carries unfinished buckets, so replacing exactly the
@@ -114,78 +144,59 @@ def write_bucketed(
     died AFTER appending bucket data but BEFORE its manifest row would
     otherwise leave a duplicate copy under the bucket on resume. Dynamic
     overwrite alone cannot clear a partition the replay writes ZERO rows
-    into, so when ``turns`` names the buckets this run owns, those
-    partition directories are deleted up front — a bucket whose
-    conversations all legitimately parse to zero triples then lands
-    clean instead of surfacing a crashed predecessor's stale rows
-    (round-6 ADVICE fix). The manifest itself stays append-only —
-    readers aggregate it per bucket.
+    into, so the partition directories of the buckets ``turns`` owns are
+    deleted up front — a bucket whose conversations all legitimately
+    parse to zero triples then lands clean instead of surfacing a
+    crashed predecessor's stale rows (round-6 ADVICE fix). Only a
+    missing directory is ignored there; any other OSError propagates.
+    The manifest itself stays append-only — readers aggregate it per
+    bucket.
     """
+    local = local_dir(out_dir)
     t = with_bucket(triples, n_buckets, bucket_fn=bucket_fn)
     e = with_bucket(errors, n_buckets, bucket_fn=bucket_fn)
-    if turns is not None:
-        import shutil
-
-        owned = [
-            r["bucket"]
-            for r in with_bucket(
-                turns.select("conv_id"), n_buckets, bucket_fn=bucket_fn
-            ).select("bucket").distinct().collect()
-        ]
-        subs = ["triples", "errors"] + (["links"] if links is not None else [])
-        for sub in subs:
-            for bkt in owned:
-                shutil.rmtree(
-                    os.path.join(out_dir, sub, "bucket=%s" % bkt),
-                    ignore_errors=True,
-                )
-    t.write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy("bucket").parquet(os.path.join(out_dir, "triples"))
-    e.write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy("bucket").parquet(os.path.join(out_dir, "errors"))
-    man_t = t.groupBy("bucket").agg(
-        F.countDistinct("conv_id").alias("convs"),
-        F.count(F.lit(1)).alias("triples"),
-    )
+    u = with_bucket(turns.select("conv_id"), n_buckets, bucket_fn=bucket_fn)
+    owned = [r["bucket"] for r in u.select("bucket").distinct().collect()]
+    subs = ["triples", "errors"] + (["links"] if links is not None else [])
+    for sub in subs:
+        for bkt in owned:
+            try:
+                shutil.rmtree(os.path.join(local, sub, "bucket=%s" % bkt))
+            except FileNotFoundError:
+                pass
+    overwrite_partitions(t, os.path.join(out_dir, "triples"), "bucket")
+    overwrite_partitions(e, os.path.join(out_dir, "errors"), "bucket")
+    man_t = t.groupBy("bucket").agg(F.count(F.lit(1)).alias("triples"))
     man_e = e.groupBy("bucket").agg(F.count(F.lit(1)).alias("errors"))
-    manifest = man_t.join(man_e, "bucket", "full")
-    fill = ["convs", "triples", "errors"]
-    if turns is not None:
-        # convs is counted from the INPUT (conversations consumed), not
-        # from distinct conv_id in the triples output: a bucket whose
-        # conversations all parse to zero triples is still finished and
-        # must record how many it consumed
-        man_u = with_bucket(
-            turns.select("conv_id"), n_buckets, bucket_fn=bucket_fn
-        ).groupBy("bucket").agg(
-            F.count(F.lit(1)).alias("turns"),
-            F.countDistinct("conv_id").alias("convs_in"),
+    # convs is counted from the INPUT (conversations consumed), not from
+    # distinct conv_id in the triples output: a bucket whose
+    # conversations all parse to zero triples is still finished and
+    # must record how many it consumed
+    man_u = u.groupBy("bucket").agg(
+        F.count(F.lit(1)).alias("turns"),
+        F.countDistinct("conv_id").alias("convs_in"),
+    )
+    manifest = (
+        man_t.join(man_e, "bucket", "full")
+        .join(man_u, "bucket", "full")
+        .select(
+            "bucket", F.coalesce("convs_in", F.lit(0)).alias("convs"),
+            "triples", "errors", "turns",
         )
-        manifest = (
-            manifest.join(man_u, "bucket", "full")
-            .withColumn("convs", F.coalesce("convs_in", F.lit(0)))
-            .drop("convs_in")
-        )
-        fill.append("turns")
-    else:
-        # null, NOT 0: "turn counting didn't run" must stay
-        # distinguishable from "bucket with zero turns"
-        manifest = manifest.withColumn("turns", F.lit(None).cast("long"))
+    )
+    fill = ["convs", "triples", "errors", "turns"]
     if links is not None:
         lk = with_bucket(links, n_buckets, bucket_fn=bucket_fn)
-        lk.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("bucket").parquet(os.path.join(out_dir, "links"))
+        overwrite_partitions(lk, os.path.join(out_dir, "links"), "bucket")
         man_l = lk.groupBy("bucket").agg(
             F.count(F.lit(1)).alias("link_decisions")
         )
         manifest = manifest.join(man_l, "bucket", "full")
         fill.append("link_decisions")
     else:
-        # same null-vs-0 distinction for link decisions; `linked` below
-        # is the explicit per-row record of whether linking ran
+        # null, NOT 0: "linking didn't run" must stay distinguishable
+        # from "zero link decisions"; `linked` below is the explicit
+        # per-row record of whether linking ran
         manifest = manifest.withColumn(
             "link_decisions", F.lit(None).cast("long")
         )
@@ -237,9 +248,7 @@ def link_catchup(
         link_fn(todo.drop("bucket"), entities), n_buckets, bucket_fn=bucket_fn
     ).persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        lk.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("bucket").parquet(os.path.join(out_dir, "links"))
+        overwrite_partitions(lk, os.path.join(out_dir, "links"), "bucket")
         null_long = F.lit(None).cast("long")
         man = (
             unlinked.join(

@@ -16,9 +16,13 @@ bucket manifests of raptor_spark.plans.checkpoint.
 from __future__ import annotations
 
 import os
-from typing import Optional
 
 from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
+
+from raptor_spark.pipeline import parse_transcripts, split_parsed
+from raptor_spark.plans.checkpoint import overwrite_partitions
 
 TRANSCRIPT_SCHEMA = (
     "conv_id string, turn_idx int, role string, text string, tool string, "
@@ -26,18 +30,11 @@ TRANSCRIPT_SCHEMA = (
 )
 
 
-def stream_build_graph(
-    spark: SparkSession,
-    transcripts_path: str,
-    out_dir: str,
-    base_uri_col: Optional[str] = None,
-    await_termination: bool = True,
-):
+def stream_build_graph(spark: SparkSession, transcripts_path: str, out_dir: str):
     """Stream transcript parquet -> triples/errors parquet, one batch
     pipeline run per micro-batch, draining with Trigger.AvailableNow.
 
-    Returns the StreamingQuery (already terminated when
-    ``await_termination`` is True)."""
+    Returns the StreamingQuery, already terminated."""
     stream = (
         spark.readStream.schema(TRANSCRIPT_SCHEMA)
         .option("maxFilesPerTrigger", 64)
@@ -45,43 +42,26 @@ def stream_build_graph(
     )
 
     def process(batch_df, batch_id: int):
-        from pyspark.sql import functions as F
-        from pyspark.storagelevel import StorageLevel
-
-        from raptor_spark.operators.canonical import relabel_bnodes
-        from raptor_spark.operators.parse import (
-            errors_of,
-            parse_documents,
-            triples_of,
-        )
-        from raptor_spark.operators.reassemble import reassemble
-
         # the triples and errors writes are two independent ACTIONS
         # whose shared lineage is dominated by the Arrow parse stage —
         # persist the PARSED frame (their common ancestor, exactly like
         # run_resumable) so each micro-batch pays the parse once, not
-        # once per write. Semantics identical to build_graph's default
-        # path: in-parse per-document dedup, then bnode relabeling.
-        extra = ("tool",) + ((base_uri_col,) if base_uri_col else ())
-        docs = reassemble(batch_df, extra_cols=extra)
-        parsed = parse_documents(
-            docs, base_uri_col=base_uri_col, dedup_per_doc=True
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+        # once per write. Same composition as build_graph's default.
+        parsed = parse_transcripts(batch_df).persist(
+            StorageLevel.MEMORY_AND_DISK
+        )
         try:
-            triples = relabel_bnodes(triples_of(parsed))
-            errors = errors_of(parsed)
+            triples, errors = split_parsed(parsed)
             # idempotent replay: each micro-batch owns its batch_id
             # partition and dynamic-partition overwrite replaces exactly
             # that partition, so a crash between the two writes +
             # restart re-lands the same batch instead of
             # double-appending (exactly-once, not at-least-once)
             for df, sub in ((triples, "triples"), (errors, "errors")):
-                (
-                    df.withColumn("batch_id", F.lit(batch_id))
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("batch_id")
-                    .parquet(os.path.join(out_dir, sub))
+                overwrite_partitions(
+                    df.withColumn("batch_id", F.lit(batch_id)),
+                    os.path.join(out_dir, sub),
+                    "batch_id",
                 )
         finally:
             parsed.unpersist()
@@ -92,6 +72,5 @@ def stream_build_graph(
         .trigger(availableNow=True)
         .start()
     )
-    if await_termination:
-        q.awaitTermination()
+    q.awaitTermination()
     return q

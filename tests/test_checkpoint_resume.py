@@ -230,3 +230,57 @@ def test_zero_row_replay_clears_stale_bucket_data(
     assert not glob.glob(os.path.join(out, "triples", "bucket=*")), (
         "stale bucket partitions survived a zero-row replay"
     )
+
+
+@pytest.mark.parametrize(
+    "uri", ["s3a://bucket/kg", "hdfs://nn:8020/kg", "file://otherhost/kg"]
+)
+def test_non_local_out_dir_is_refused_before_any_job(spark, transcripts, uri):
+    """Resume state is read and the pre-clear runs through the local file
+    system; a non-local out_dir would read as "nothing finished" and
+    silently skip the pre-clear, so every entry point refuses it with a
+    ValueError before any Spark job runs."""
+    from raptor_spark.operators.link import customer_entities, link_entities
+    from raptor_spark.pipeline import build_graph, run_resumable
+    from raptor_spark.plans import checkpoint as ckpt
+
+    ents = customer_entities(spark, "/root/testdata/sf0.001")
+    triples, errors = build_graph(transcripts)
+    calls = [
+        lambda: run_resumable(spark, transcripts, uri, n_buckets=4,
+                              entities=ents),
+        lambda: ckpt.write_bucketed(triples, errors, uri, 4,
+                                    turns=transcripts),
+        lambda: ckpt.link_catchup(spark, transcripts, uri, 4, ents,
+                                  link_fn=link_entities),
+    ]
+    sc = spark.sparkContext
+    group = "non-local-out-dir"
+    sc.setJobGroup(group, "refused checkpoint dir")
+    try:
+        for call in calls:
+            with pytest.raises(ValueError, match="local path or file: URI"):
+                call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_pre_clear_propagates_errors_other_than_missing(
+    spark, transcripts, tmp_path
+):
+    """The pre-clear ignores only a missing bucket directory: a regular
+    file where a bucket= directory should be is an error, not a bucket
+    to skip silently. The out_dir is given as a file: URI, which the
+    pre-clear resolves to the same local directory."""
+    from raptor_spark.pipeline import build_graph
+    from raptor_spark.plans import checkpoint as ckpt
+
+    out = tmp_path / "job"
+    bkt = ckpt.with_bucket(transcripts, 4).select("bucket").first().bucket
+    (out / "triples").mkdir(parents=True)
+    (out / "triples" / f"bucket={bkt}").write_text("not a directory")
+    triples, errors = build_graph(transcripts)
+    with pytest.raises(NotADirectoryError):
+        ckpt.write_bucketed(triples, errors, out.as_uri(), 4,
+                            turns=transcripts)

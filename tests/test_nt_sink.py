@@ -111,3 +111,48 @@ def test_backslash_uri_render_parse_asymmetry_is_reference_faithful():
     assert "<http://a/b\\\\c>" in line
     _triples, errs = parse_document(line)
     assert errs and "escape" in errs[0]["message"]
+
+
+
+_TWO_SESSIONS = r"""
+import json
+import sys
+
+from pyspark.sql import SparkSession
+
+from raptor_spark.operators.serialize import nt_lines_df
+
+rows, schema = [tuple(json.loads(sys.argv[1]))], sys.argv[2]
+out = []
+for _ in range(2):
+    spark = (SparkSession.builder.master("local[1]")
+             .config("spark.ui.enabled", "false").getOrCreate())
+    df = spark.createDataFrame(rows, schema)
+    out.append([r.nt_line for r in nt_lines_df(df).collect()])
+    spark.stop()
+print(json.dumps(out))
+"""
+
+
+def test_nt_lines_df_across_sessions():
+    """The kernel fallback's pandas UDF belongs to the session that runs
+    it: a second SparkSession in the same process must render the same
+    lines, and its Python tasks must not report to the stopped context's
+    accumulator server."""
+    import json
+    import os
+    import pathlib
+    import subprocess
+    import sys
+
+    row = ROWS[5]  # non-ASCII literal: rendered by the kernel pandas UDF
+    root = str(pathlib.Path(__file__).resolve().parents[1])
+    proc = subprocess.run(
+        [sys.executable, "-c", _TWO_SESSIONS, json.dumps(row), SCHEMA],
+        cwd=root, env=dict(os.environ, PYTHONPATH=root),
+        capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    first, second = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert first == second == [nt_render_statement(Triple(*row))]
+    assert "Failed to update accumulator" not in proc.stderr

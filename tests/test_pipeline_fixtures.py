@@ -92,6 +92,54 @@ def _golden(path: pathlib.Path):
     return gold
 
 
+def test_build_graph_rapper_mode(spark):
+    """The mode the P/R gate compares against rapper output, on an
+    in-test corpus: ``relabel=False, dedup=False`` keeps each document's
+    own blank-node labels and its duplicate statements, and relative
+    IRIs resolve against the per-conversation ``base_uri``. The default
+    mode on the same input relabels per conversation and dedups."""
+    from raptor_spark.kernel.terms import KIND_BLANK, KIND_LITERAL
+    from raptor_spark.pipeline import build_graph
+
+    turns = [
+        "@prefix ex: <http://ex.org/> .\n<a> ex:p _:b0 .\n",
+        '_:b0 ex:q "x" .\n<a> ex:p _:b0 .\n',
+    ]
+    bases = {"c1": "http://one.example/doc/", "c2": "http://two.example/"}
+    transcripts = spark.createDataFrame(
+        [
+            (conv, i, "user", text, "turtle", base)
+            for conv, base in bases.items()
+            for i, text in enumerate(turns)
+        ],
+        "conv_id string, turn_idx int, role string, text string, "
+        "tool string, base_uri string",
+    )
+    cols = ["conv_id", "subj", "pred", "obj_kind", "obj_lex"]
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.select(cols).collect())
+
+    def graph(conv, label, base, copies):
+        return [(conv, label, "http://ex.org/q", KIND_LITERAL, "x")] + [
+            (conv, base + "a", "http://ex.org/p", KIND_BLANK, label[2:])
+        ] * copies
+
+    triples, errors = build_graph(
+        transcripts, base_uri_col="base_uri", relabel=False, dedup=False,
+    )
+    assert errors.count() == 0
+    assert rows(triples) == graph("c1", "_:b0", bases["c1"], 2) + graph(
+        "c2", "_:b0", bases["c2"], 2
+    )
+
+    triples, errors = build_graph(transcripts, base_uri_col="base_uri")
+    assert errors.count() == 0
+    assert rows(triples) == graph("c1", "_:c1.b0", bases["c1"], 1) + graph(
+        "c2", "_:c2.b0", bases["c2"], 1
+    )
+
+
 def test_pipeline_fixture_precision_recall(spark):
     from raptor_spark.pipeline import build_graph
     from raptor_spark.sources.transcripts import fixture_transcripts
@@ -106,8 +154,7 @@ def test_pipeline_fixture_precision_recall(spark):
     # conversations, matching rapper's per-run genid counter); dedup=False
     # compares the raw statement stream, as rapper emits duplicates
     triples, errors = build_graph(
-        transcripts, base_uri_col="base_uri", relabel=False,
-        global_dedup=False, dedup=False,
+        transcripts, base_uri_col="base_uri", relabel=False, dedup=False,
     )
     err_rows = errors.count()
     rows = triples.select(
