@@ -11,11 +11,15 @@ and :func:`split_parsed` (relabelled triples + parse errors).
 ``streaming.pipeline.stream_build_graph`` differ only in what they persist
 and where they write.
 
-Exchanges: conv_id reassembly, plus the bucketed write — two in the
-default materialization path. Statement dedup is per-document inside the
-parse stage (the reference's own semantic), so it costs no shuffle.
-Everything between exchanges runs in whole-stage codegen or one
-Arrow-batched Python stage. AQE is expected on (skew-join/coalesce).
+Exchanges: :func:`build_graph` and the streaming micro-batch have one,
+the conv_id reassembly. :func:`run_resumable` adds a range exchange on
+(bucket, conv_id) between reassembly and parse, so every bucketed write
+task holds a contiguous range of buckets; its writes and its manifest
+counters then read the persisted parse output. Statement dedup is
+per-document inside the parse stage (the reference's own semantic), so
+it costs no shuffle. Everything between exchanges runs in whole-stage
+codegen or one Arrow-batched Python stage. AQE is expected on
+(skew-join/coalesce).
 """
 
 from __future__ import annotations
@@ -47,9 +51,26 @@ def parse_transcripts(
     parsed document, src/raptor_abbrev.c:354-397); after relabeling,
     bnode triples are globally unique by construction (labels embed
     conv_id). ``operators.canonical.dedup_statements`` is the explicit
-    (salted, two-phase) aggregation for callers that need more."""
+    (salted, two-phase) aggregation for callers that need more.
+
+    Transcripts that carry a checkpoint ``bucket`` column
+    (``ckpt.with_bucket``, the resumable path) get their documents
+    range-partitioned on (bucket, conv_id) before the parse stage: every
+    parse task, and so every task writing its output, holds one
+    contiguous range of buckets, and a ``partitionBy("bucket")`` write
+    creates at most non-empty buckets + tasks - 1 files instead of up to
+    tasks x buckets. The explicit partition count (the session's shuffle
+    partitions) keeps parse parallelism independent of the bucket count
+    and exempt from AQE coalescing; a bucket spans two tasks when there
+    are more tasks than buckets."""
     extra = ("tool",) + ((base_uri_col,) if base_uri_col else ())
-    docs = reassemble(transcripts, extra_cols=extra)
+    clustered = "bucket" in transcripts.columns
+    docs = reassemble(
+        transcripts, extra_cols=extra + (("bucket",) if clustered else ())
+    )
+    if clustered:
+        n = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        docs = docs.repartitionByRange(n, "bucket", "conv_id")
     return parse_documents(docs, base_uri_col=base_uri_col, dedup_per_doc=dedup)
 
 
@@ -101,16 +122,18 @@ def run_resumable(
     the manifest rows appended by this run. ``out_dir`` must be on the
     local file system (ckpt.local_dir).
 
-    The materialization fans into several write/aggregate jobs (triples,
-    errors, links, manifest counters); the parse stage's output is
-    persisted for the duration so the mapInArrow parse stage runs once,
-    not once per job."""
+    The turns keep their ``bucket`` column, so :func:`parse_transcripts`
+    range-partitions the documents on (bucket, conv_id): the triples and
+    errors writes get about one file per bucket (ckpt.write_bucketed).
+    The materialization is three bucketed writes (triples, errors,
+    links) and one manifest aggregation; the turns and the parse stage's
+    output are persisted for the duration so the mapInArrow parse stage
+    runs once, not once per job."""
     from pyspark.storagelevel import StorageLevel
 
-    todo = ckpt.filter_unfinished(
+    turns = ckpt.filter_unfinished(
         spark, transcripts, out_dir, n_buckets, bucket_fn=bucket_fn
-    )
-    turns = todo.drop("bucket").persist(StorageLevel.MEMORY_AND_DISK)
+    ).persist(StorageLevel.MEMORY_AND_DISK)
     parsed = parse_transcripts(turns).persist(StorageLevel.MEMORY_AND_DISK)
     try:
         triples, errors = split_parsed(parsed)

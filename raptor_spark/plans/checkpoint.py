@@ -2,18 +2,24 @@
 
 The job is keyed by conv_id buckets (``bucket = pmod(xxhash64(conv_id), N)``
 — deterministic across runs and retries). Each completed bucket writes its
-output under ``out_dir/triples/bucket=<b>/`` plus a manifest row
-(bucket, convs, triples, errors, parse counters) under ``out_dir/manifest/``.
-A rerun reads the manifest and anti-joins finished buckets out of the input,
-so only unfinished work re-executes: Spark's task retry gives at-least-once
-inside a run; the manifest gives cross-run resume (north-rule requirement;
-the reference has no equivalent — it is a single-process stream).
+output under ``out_dir/{triples,errors,links}/bucket=<b>/`` plus a manifest
+row (bucket, convs, turns, triples, errors, link decisions) under
+``out_dir/manifest/``; the counters of every bucket come from one
+aggregation (manifest_counts). The rows reach the writes clustered by
+bucket (pipeline.run_resumable range-partitions its documents on
+(bucket, conv_id)), so each table gets about one file per bucket: at most
+non-empty buckets + tasks - 1. A rerun reads the manifest and anti-joins
+finished buckets out of the input, so only unfinished work re-executes:
+Spark's task retry gives at-least-once inside a run; the manifest gives
+cross-run resume (north-rule requirement; the reference has no
+equivalent — it is a single-process stream).
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+from functools import reduce
 from typing import Optional
 from urllib.parse import urlparse
 
@@ -133,10 +139,19 @@ def write_bucketed(
 
     Returns the manifest DataFrame — the north-rule lineage counters per
     bucket: conversations, turns parsed, triples emitted, parse errors,
-    link decisions.  ``turns`` is the transcript turn table the run
-    consumed (conversations and turns are counted from it per bucket);
-    ``links`` is the (conv_id, entity_uri, mentions) linking output,
-    materialized under ``links/bucket=`` alongside the triples.
+    link decisions (see manifest_counts).  ``turns`` is the transcript
+    turn table the run consumed; ``links`` is the (conv_id, entity_uri,
+    mentions) linking output, materialized under ``links/bucket=``
+    alongside the triples. The links are persisted for the call, so the
+    linking stage feeds both their write and the manifest but runs once.
+
+    File count: a ``partitionBy("bucket")`` write task creates one file
+    per bucket it holds. Triples and errors clustered by bucket
+    (run_resumable range-partitions its documents on (bucket, conv_id))
+    give at most non-empty buckets + tasks - 1 files per table;
+    unclustered input gives up to tasks x buckets. The links are
+    hash-partitioned on bucket before they are persisted, so each bucket
+    lands in one task and one file.
 
     Bucket data writes use DYNAMIC partition overwrite, not append: a
     run only carries unfinished buckets, so replacing exactly the
@@ -152,65 +167,77 @@ def write_bucketed(
     The manifest itself stays append-only — readers aggregate it per
     bucket.
     """
+    from pyspark.storagelevel import StorageLevel
+
     local = local_dir(out_dir)
-    t = with_bucket(triples, n_buckets, bucket_fn=bucket_fn)
-    e = with_bucket(errors, n_buckets, bucket_fn=bucket_fn)
     u = with_bucket(turns.select("conv_id"), n_buckets, bucket_fn=bucket_fn)
-    owned = [r["bucket"] for r in u.select("bucket").distinct().collect()]
-    subs = ["triples", "errors"] + (["links"] if links is not None else [])
-    for sub in subs:
-        for bkt in owned:
-            try:
-                shutil.rmtree(os.path.join(local, sub, "bucket=%s" % bkt))
-            except FileNotFoundError:
-                pass
-    overwrite_partitions(t, os.path.join(out_dir, "triples"), "bucket")
-    overwrite_partitions(e, os.path.join(out_dir, "errors"), "bucket")
-    man_t = t.groupBy("bucket").agg(F.count(F.lit(1)).alias("triples"))
-    man_e = e.groupBy("bucket").agg(F.count(F.lit(1)).alias("errors"))
-    # convs is counted from the INPUT (conversations consumed), not from
-    # distinct conv_id in the triples output: a bucket whose
-    # conversations all parse to zero triples is still finished and
-    # must record how many it consumed
-    man_u = u.groupBy("bucket").agg(
-        F.count(F.lit(1)).alias("turns"),
-        F.countDistinct("conv_id").alias("convs_in"),
-    )
-    manifest = (
-        man_t.join(man_e, "bucket", "full")
-        .join(man_u, "bucket", "full")
-        .select(
-            "bucket", F.coalesce("convs_in", F.lit(0)).alias("convs"),
-            "triples", "errors", "turns",
-        )
-    )
-    fill = ["convs", "triples", "errors", "turns"]
+    tables = {
+        "triples": with_bucket(triples, n_buckets, bucket_fn=bucket_fn),
+        "errors": with_bucket(errors, n_buckets, bucket_fn=bucket_fn),
+    }
     if links is not None:
-        lk = with_bucket(links, n_buckets, bucket_fn=bucket_fn)
-        overwrite_partitions(lk, os.path.join(out_dir, "links"), "bucket")
-        man_l = lk.groupBy("bucket").agg(
-            F.count(F.lit(1)).alias("link_decisions")
+        tables["links"] = (
+            with_bucket(links, n_buckets, bucket_fn=bucket_fn)
+            .repartition("bucket")
+            .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        manifest = manifest.join(man_l, "bucket", "full")
-        fill.append("link_decisions")
-    else:
-        # null, NOT 0: "linking didn't run" must stay distinguishable
-        # from "zero link decisions"; `linked` below is the explicit
-        # per-row record of whether linking ran
-        manifest = manifest.withColumn(
-            "link_decisions", F.lit(None).cast("long")
+    try:
+        owned = [r["bucket"] for r in u.select("bucket").distinct().collect()]
+        for sub, df in tables.items():
+            for bkt in owned:
+                try:
+                    shutil.rmtree(os.path.join(local, sub, "bucket=%s" % bkt))
+                except FileNotFoundError:
+                    pass
+            overwrite_partitions(df, os.path.join(out_dir, sub), "bucket")
+        manifest = (
+            manifest_counts(u, tables)
+            .withColumn("linked", F.lit(links is not None))
+            .withColumn("ts", F.current_timestamp())
+            # materialize once: the manifest is both written and handed
+            # back for inspection, and its lineage reaches through the
+            # parse stage — without this, every downstream collect()
+            # re-runs the parse
+            .localCheckpoint()
         )
-    manifest = (
-        manifest.na.fill(0, fill)
-        .withColumn("linked", F.lit(links is not None))
-        .withColumn("ts", F.current_timestamp())
-        # materialize once: the manifest is both written and handed back
-        # for inspection, and its lineage reaches through the parse stage —
-        # without this, every downstream collect() re-runs the parse
-        .localCheckpoint()
-    )
+    finally:
+        if links is not None:
+            tables["links"].unpersist()
     manifest.write.mode("append").parquet(os.path.join(out_dir, "manifest"))
     return manifest
+
+
+def manifest_counts(turns: DataFrame, tables: dict) -> DataFrame:
+    """Per-bucket counters (bucket, convs, triples, errors, turns,
+    link_decisions) in ONE aggregation over a union of the bucketed
+    inputs: ``turns`` (bucket, conv_id) and ``tables`` mapping "triples",
+    "errors" and, when linking ran, "links" to frames with bucket and
+    conv_id columns.
+
+    convs is counted from the INPUT (conversations consumed), not from
+    distinct conv_id in the triples output: a bucket whose conversations
+    all parse to zero triples is still finished and must record how many
+    it consumed. A counter with no rows in a bucket is 0; link_decisions
+    is null, NOT 0, when no links are given: "linking didn't run" must
+    stay distinguishable from "zero link decisions" (write_bucketed's
+    ``linked`` column records which)."""
+    rows = reduce(DataFrame.unionByName, [
+        df.select("bucket", "conv_id", F.lit(kind).alias("kind"))
+        for kind, df in [("turns", turns), *tables.items()]
+    ])
+    kind = F.col("kind")
+
+    def count(k: str):
+        return F.count(F.when(kind == k, 1))
+
+    links = count("links") if "links" in tables else F.lit(None).cast("long")
+    return rows.groupBy("bucket").agg(
+        F.countDistinct(F.when(kind == "turns", F.col("conv_id"))).alias("convs"),
+        count("triples").alias("triples"),
+        count("errors").alias("errors"),
+        count("turns").alias("turns"),
+        links.alias("link_decisions"),
+    )
 
 
 def link_catchup(

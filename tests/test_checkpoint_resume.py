@@ -284,3 +284,146 @@ def test_pre_clear_propagates_errors_other_than_missing(
     with pytest.raises(NotADirectoryError):
         ckpt.write_bucketed(triples, errors, out.as_uri(), 4,
                             turns=transcripts)
+
+
+@pytest.fixture(scope="module")
+def mention_entities(transcripts):
+    """An entity dictionary with one entry per key the transcripts
+    mention, so every conversation with a mention links."""
+    from raptor_spark.operators.link import detect_mentions
+
+    return (
+        detect_mentions(transcripts)
+        .select("key")
+        .distinct()
+        .withColumn(
+            "entity_uri", F.concat(F.lit("http://ex.org/entity/"), "key")
+        )
+        .cache()
+    )
+
+
+def _plan_nodes(plan):
+    """A Catalyst plan's nodes through ``children`` only — not the cached
+    physical plan an InMemoryRelation carries as an inner child."""
+    yield plan
+    kids = plan.children()
+    for i in range(kids.size()):
+        yield from _plan_nodes(kids.apply(i))
+
+
+@pytest.mark.parametrize("side", ["below", "above"])
+def test_bucket_clustered_layout(
+    spark, transcripts, mention_entities, tmp_path_factory, side
+):
+    """run_resumable range-partitions its documents on (bucket, conv_id),
+    so each partitionBy("bucket") write task holds a contiguous range of
+    buckets: every table gets at most non-empty buckets + partitions - 1
+    part files (hash-partitioned rows give up to partitions x buckets),
+    with n_buckets below and above the session's shuffle partitions. The
+    layout changes nothing else: the stored triples are build_graph's and
+    the manifest totals are the input's conversation and turn counts.
+    The input carries malformed documents so the errors table is
+    written too."""
+    import glob
+    import os
+
+    from raptor_spark.pipeline import build_graph, run_resumable
+
+    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_buckets = parts // 2 if side == "below" else 3 * parts
+    bad = (
+        transcripts.filter(F.col("turn_idx") == 0)
+        .orderBy("conv_id")
+        .limit(24)
+        .select(
+            F.concat(F.lit("bad-"), F.col("conv_id")).alias("conv_id"),
+            "turn_idx", "role",
+            F.lit("<http://ex.org/s> <http://ex.org/p> .").alias("text"),
+            F.lit("ntriples").alias("tool"), "ts",
+        )
+    )
+    turns = transcripts.unionByName(bad)
+    out = str(tmp_path_factory.mktemp("clustered"))
+    rows = run_resumable(
+        spark, turns, out, n_buckets=n_buckets, entities=mention_entities
+    ).collect()
+
+    writers = set()
+    for table in ("triples", "errors", "links"):
+        files = glob.glob(os.path.join(out, table, "bucket=*", "part-*"))
+        buckets = {os.path.dirname(f) for f in files}
+        assert buckets, "no %s written" % table
+        assert len(files) <= len(buckets) + parts - 1, (
+            table, len(files), len(buckets), parts
+        )
+        if table == "triples":
+            writers = {os.path.basename(f).split("-")[1] for f in files}
+    assert len(writers) > 1, "the bound must hold across several write tasks"
+
+    cols = ["subj", "pred", "obj_kind", "obj_lex", "obj_datatype",
+            "obj_lang", "graph"]
+    got = spark.read.parquet(f"{out}/triples").select(cols)
+    expected = build_graph(turns)[0].select(cols)
+    assert got.subtract(expected).count() == 0
+    assert expected.subtract(got).count() == 0
+
+    assert sum(r.convs for r in rows) == turns.select("conv_id").distinct().count()
+    assert sum(r.turns for r in rows) == turns.count()
+    assert sum(r.errors for r in rows) == bad.count()
+
+
+def test_resumable_parse_parallelism_independent_of_buckets(
+    spark, transcripts, tmp_path, monkeypatch
+):
+    """With fewer buckets than cores, the parse stage of run_resumable
+    still runs at least defaultParallelism tasks: the documents are
+    range-partitioned on (bucket, conv_id) into an explicit number of
+    partitions, never hash-partitioned on bucket (one task per non-empty
+    bucket) or coalesced by AQE to the size of the input."""
+    import raptor_spark.pipeline as P
+
+    parsed = []
+    parse_documents = P.parse_documents
+
+    def spy(docs, **kw):
+        df = parse_documents(docs, **kw)
+        parsed.append(df)
+        return df
+
+    monkeypatch.setattr(P, "parse_documents", spy)
+    P.run_resumable(spark, transcripts, str(tmp_path / "job"), n_buckets=2)
+    (df,) = parsed
+    assert df.rdd.getNumPartitions() >= spark.sparkContext.defaultParallelism
+
+
+def test_manifest_is_one_aggregation(
+    spark, transcripts, mention_entities, tmp_path, monkeypatch
+):
+    """The manifest counters come from ONE aggregation keyed by bucket
+    over the run's persisted inputs — no per-counter groupBy joined back
+    together — and the linking stage is persisted, so its join does not
+    run a second time for the link_decisions counter."""
+    from raptor_spark.pipeline import run_resumable
+    from raptor_spark.plans import checkpoint as ckpt
+
+    plans = []
+    manifest_counts = ckpt.manifest_counts
+
+    def spy(turns, tables):
+        df = manifest_counts(turns, tables)
+        # optimized while the run's inputs are still persisted
+        plans.append(df._jdf.queryExecution().optimizedPlan())
+        return df
+
+    monkeypatch.setattr(ckpt, "manifest_counts", spy)
+    run_resumable(spark, transcripts, str(tmp_path / "job"), n_buckets=8,
+                  entities=mention_entities)
+    (plan,) = plans
+    nodes = list(_plan_nodes(plan))
+    assert not [n for n in nodes if n.nodeName() == "Join"]
+    aggs = [n for n in nodes if n.nodeName() == "Aggregate"]
+    assert len(aggs) == 1
+    keys = aggs[0].groupingExpressions()
+    assert keys.size() == 1
+    assert keys.apply(0).toString().startswith("bucket#")
