@@ -3,23 +3,24 @@
 transcripts --reassemble--> documents --parse UDF--> parsed rows
           --split/relabel--> triples + errors --> graph tables.
 
-Raptor's statement stream (parser -> statement handler -> sink) becomes two
-compositions every construction path shares: :func:`parse_transcripts`
-(reassembly, then the Arrow parse stage with per-document statement dedup)
-and :func:`split_parsed` (relabelled triples + parse errors).
-:func:`build_graph`, :func:`run_resumable` and the micro-batch body of
-``streaming.pipeline.stream_build_graph`` differ only in what they persist
-and where they write.
+Raptor's statement stream (parser -> statement handler -> sink) becomes
+compositions every construction path shares: :func:`transcript_docs`
+(the conv_id reassembly), :func:`parse_transcripts` (reassembly, then the
+Arrow parse stage with per-document statement dedup) and
+:func:`split_parsed` (relabelled triples + parse errors).
+:func:`build_graph` and the micro-batch body of
+``streaming.pipeline.stream_build_graph`` differ only in what they
+persist and where they write.
 
 Exchanges: :func:`build_graph` and the streaming micro-batch have one,
-the conv_id reassembly. :func:`run_resumable` adds a range exchange on
-(bucket, conv_id) between reassembly and parse, so every bucketed write
-task holds a contiguous range of buckets; its writes and its manifest
-counters then read the persisted parse output. Statement dedup is
-per-document inside the parse stage (the reference's own semantic), so
-it costs no shuffle. Everything between exchanges runs in whole-stage
-codegen or one Arrow-batched Python stage. AQE is expected on
-(skew-join/coalesce).
+the conv_id reassembly. :func:`run_resumable` composes reassembly and
+parse itself and puts a range exchange on (bucket, conv_id) between
+them, so every bucketed write task holds a contiguous range of buckets;
+its writes and its manifest counters then read the persisted parse
+output. Statement dedup is per-document inside the parse stage (the
+reference's own semantic), so it costs no shuffle. Everything between
+exchanges runs in whole-stage codegen or one Arrow-batched Python stage.
+AQE is expected on (skew-join/coalesce).
 """
 
 from __future__ import annotations
@@ -32,6 +33,20 @@ from raptor_spark.operators.canonical import relabel_bnodes
 from raptor_spark.operators.parse import errors_of, parse_documents, triples_of
 from raptor_spark.operators.reassemble import reassemble
 from raptor_spark.plans import checkpoint as ckpt
+
+# range partitions per core of run_resumable's parse stage (Spark's tuning
+# guide: 2-3 tasks per core). Each task writes one file per bucket it
+# holds, so fewer tasks mean fewer files; but one task per core measured
+# +6.7% peak_mem_mb on the perfbench build (16k documents: each task's
+# Arrow batch held 4000 of them, not 2000), and spark.sql.shuffle.partitions
+# (default 200) made 214 triples files for 16 buckets on sf0.001
+PARSE_TASKS_PER_CORE = 2
+
+
+def transcript_docs(transcripts: DataFrame, *carry: str) -> DataFrame:
+    """transcripts -> one document per conversation (conv_id, doc_text,
+    tool, *carry): the conv_id reassembly exchange."""
+    return reassemble(transcripts, extra_cols=("tool",) + carry)
 
 
 def parse_transcripts(
@@ -51,26 +66,10 @@ def parse_transcripts(
     parsed document, src/raptor_abbrev.c:354-397); after relabeling,
     bnode triples are globally unique by construction (labels embed
     conv_id). ``operators.canonical.dedup_statements`` is the explicit
-    (salted, two-phase) aggregation for callers that need more.
-
-    Transcripts that carry a checkpoint ``bucket`` column
-    (``ckpt.with_bucket``, the resumable path) get their documents
-    range-partitioned on (bucket, conv_id) before the parse stage: every
-    parse task, and so every task writing its output, holds one
-    contiguous range of buckets, and a ``partitionBy("bucket")`` write
-    creates at most non-empty buckets + tasks - 1 files instead of up to
-    tasks x buckets. The explicit partition count (the session's shuffle
-    partitions) keeps parse parallelism independent of the bucket count
-    and exempt from AQE coalescing; a bucket spans two tasks when there
-    are more tasks than buckets."""
-    extra = ("tool",) + ((base_uri_col,) if base_uri_col else ())
-    clustered = "bucket" in transcripts.columns
-    docs = reassemble(
-        transcripts, extra_cols=extra + (("bucket",) if clustered else ())
+    (salted, two-phase) aggregation for callers that need more."""
+    docs = transcript_docs(
+        transcripts, *((base_uri_col,) if base_uri_col else ())
     )
-    if clustered:
-        n = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        docs = docs.repartitionByRange(n, "bucket", "conv_id")
     return parse_documents(docs, base_uri_col=base_uri_col, dedup_per_doc=dedup)
 
 
@@ -122,19 +121,31 @@ def run_resumable(
     the manifest rows appended by this run. ``out_dir`` must be on the
     local file system (ckpt.local_dir).
 
-    The turns keep their ``bucket`` column, so :func:`parse_transcripts`
-    range-partitions the documents on (bucket, conv_id): the triples and
-    errors writes get about one file per bucket (ckpt.write_bucketed).
-    The materialization is three bucketed writes (triples, errors,
-    links) and one manifest aggregation; the turns and the parse stage's
-    output are persisted for the duration so the mapInArrow parse stage
-    runs once, not once per job."""
+    The turns keep their ``bucket`` column, and the reassembled
+    documents are range-partitioned on (bucket, conv_id) before the
+    parse stage, so every parse task, and every task writing its output,
+    holds one contiguous range of buckets: the triples and errors writes
+    get about one file per bucket (ckpt.write_bucketed). The range
+    exchange has PARSE_TASKS_PER_CORE x defaultParallelism partitions:
+    an explicit count is exempt from AQE coalescing, so parse parallelism
+    depends on neither the bucket count nor the input's size nor
+    spark.sql.shuffle.partitions; a bucket spans two tasks when there are
+    more tasks than buckets. The materialization is three bucketed
+    writes (triples, errors, links) and one manifest aggregation; the
+    turns and the parse stage's output are persisted for the duration so
+    the mapInArrow parse stage runs once, not once per job."""
     from pyspark.storagelevel import StorageLevel
 
     turns = ckpt.filter_unfinished(
         spark, transcripts, out_dir, n_buckets, bucket_fn=bucket_fn
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    parsed = parse_transcripts(turns).persist(StorageLevel.MEMORY_AND_DISK)
+    docs = transcript_docs(turns, "bucket").repartitionByRange(
+        PARSE_TASKS_PER_CORE * spark.sparkContext.defaultParallelism,
+        "bucket", "conv_id",
+    )
+    parsed = parse_documents(docs, dedup_per_doc=True).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
     try:
         triples, errors = split_parsed(parsed)
         links = None

@@ -170,6 +170,10 @@ def write_bucketed(
     from pyspark.storagelevel import StorageLevel
 
     local = local_dir(out_dir)
+    # every input is bucketed here, by the one with_bucket rule: the
+    # triples, errors and links carry no bucket column, and turns need
+    # only conv_id. The bucket run_resumable's turns already carry is the
+    # same expression; recomputing it costs one hash per turn
     u = with_bucket(turns.select("conv_id"), n_buckets, bucket_fn=bucket_fn)
     tables = {
         "triples": with_bucket(triples, n_buckets, bucket_fn=bucket_fn),

@@ -320,17 +320,19 @@ def test_bucket_clustered_layout(
     so each partitionBy("bucket") write task holds a contiguous range of
     buckets: every table gets at most non-empty buckets + partitions - 1
     part files (hash-partitioned rows give up to partitions x buckets),
-    with n_buckets below and above the session's shuffle partitions. The
-    layout changes nothing else: the stored triples are build_graph's and
-    the manifest totals are the input's conversation and turn counts.
+    with n_buckets below and above the range exchange's partition count.
+    The layout changes nothing else: the stored triples are build_graph's
+    and the manifest totals are the input's conversation and turn counts.
     The input carries malformed documents so the errors table is
     written too."""
     import glob
     import os
 
-    from raptor_spark.pipeline import build_graph, run_resumable
+    from raptor_spark.pipeline import (
+        PARSE_TASKS_PER_CORE, build_graph, run_resumable,
+    )
 
-    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    parts = PARSE_TASKS_PER_CORE * spark.sparkContext.defaultParallelism
     n_buckets = parts // 2 if side == "below" else 3 * parts
     bad = (
         transcripts.filter(F.col("turn_idx") == 0)
@@ -377,10 +379,11 @@ def test_resumable_parse_parallelism_independent_of_buckets(
     spark, transcripts, tmp_path, monkeypatch
 ):
     """With fewer buckets than cores, the parse stage of run_resumable
-    still runs at least defaultParallelism tasks: the documents are
-    range-partitioned on (bucket, conv_id) into an explicit number of
-    partitions, never hash-partitioned on bucket (one task per non-empty
-    bucket) or coalesced by AQE to the size of the input."""
+    still runs at least defaultParallelism tasks that hold documents:
+    the documents are range-partitioned on (bucket, conv_id) into an
+    explicit number of partitions, never hash-partitioned on bucket (one
+    busy task per non-empty bucket) or coalesced by AQE to the size of
+    the input."""
     import raptor_spark.pipeline as P
 
     parsed = []
@@ -394,7 +397,10 @@ def test_resumable_parse_parallelism_independent_of_buckets(
     monkeypatch.setattr(P, "parse_documents", spy)
     P.run_resumable(spark, transcripts, str(tmp_path / "job"), n_buckets=2)
     (df,) = parsed
-    assert df.rdd.getNumPartitions() >= spark.sparkContext.defaultParallelism
+    cores = spark.sparkContext.defaultParallelism
+    assert df.rdd.getNumPartitions() >= cores
+    busy = df.select(F.spark_partition_id().alias("p")).distinct().count()
+    assert busy >= cores
 
 
 def test_manifest_is_one_aggregation(
