@@ -16,7 +16,7 @@ SQL-reconstructible; ``_decode_stub`` remains for opaque payloads.
 
 Everything here is deterministic and relationally reconstructible, so
 the DuckDB oracle can verify the full decode -> feature path bit-for-bit
-(see queries.q_media_decode / q_media_features).
+(see queries.media.q_media_decode / q_media_features).
 """
 
 from __future__ import annotations
@@ -274,24 +274,18 @@ def _decode_stub(payload: bytes, media_type: str):
     }
 
 
-def decode_media(
-    media: DataFrame,
-    use_real_codec: bool = False,
-    codec: str = None,
-) -> DataFrame:
+def decode_media(media: DataFrame, codec: str = "stub") -> DataFrame:
     """binary payload -> typed metadata, one Arrow batch at a time.
 
     ``codec``: 'stub' (default; header-derived fake), 'real' (raise on
     media types with no codec), or 'auto' (real decode where a codec
     exists — PPM/BMP/WAV pure-Python, PIL if importable — per-row stub
-    fallback where none does, e.g. video). ``use_real_codec=True`` is
-    the legacy spelling of codec='real'.
+    fallback where none does, e.g. video).
 
     The batch shape is the part that matters at 100 TB: payloads never
     leave the executor, the stage is map-only (no shuffle), and the
     output drops the binary column so downstream stages shuffle only
     metadata."""
-    codec = codec or ("real" if use_real_codec else "stub")
     if codec == "stub":
         decode = _decode_stub
     elif codec == "real":

@@ -30,7 +30,7 @@ operators.parse.parse_one's dispatch.
 
 The scorers are pure functions over (buffer, identifier, suffix, mime),
 so they run equally driver-side (tests) and inside an Arrow-batched
-pandas UDF (queries.q_format_guess).
+pandas UDF (queries.relational.q_format_guess).
 """
 
 from __future__ import annotations

@@ -166,7 +166,6 @@ class _TurtleModel:
 def to_turtle(
     triples: Iterable[Triple],
     namespaces: Optional[Dict[str, str]] = None,
-    indent: str = "    ",
     _bnode_map: Optional[Dict[str, str]] = None,
     _no_inline: frozenset = frozenset(),
     _prefix_header: bool = True,
@@ -242,7 +241,7 @@ def to_turtle(
         return blabel(label)
 
     def render_props(subj: str, depth: int) -> str:
-        pad = indent * depth
+        pad = "    " * depth
         parts = []
         ps = model.props.get(subj, OrderedDict())
         for pred, ts in ps.items():
@@ -254,7 +253,7 @@ def to_turtle(
     def render_inline_bnode(label: str, depth: int) -> str:
         emitted.add(label)
         body = render_props(label, depth + 1)
-        pad = indent * depth
+        pad = "    " * depth
         return "[\n" + body + "\n" + pad + "]"
 
     for subj in model.props:

@@ -46,16 +46,13 @@ def relabel_bnodes(triples: DataFrame) -> DataFrame:
     )
 
 
-def dedup_statements(
-    triples: DataFrame, global_dedup: bool = False, salt_buckets: int = 0
-) -> DataFrame:
+def dedup_statements(triples: DataFrame, salt_buckets: int = 0) -> DataFrame:
     """Statement dedup on the logical term columns (equality on them is
     exactly term equality after canonicalization — the reference compares
     terms the same way, src/raptor_term.c:655-798).
 
-    Per-conversation by default (bnode labels are conv-scoped); pass
-    ``global_dedup=True`` after :func:`relabel_bnodes` for whole-graph
-    materialization.
+    Per conversation: the keys are conv_id plus the term columns (bnode
+    labels are conv-scoped).
 
     ``salt_buckets > 0`` forces an explicit two-phase aggregation
     (partial dedup on (salt, key) then final) for skewed hub keys — the
@@ -63,11 +60,10 @@ def dedup_statements(
     hash-aggregate is already two-phase, so the default path just uses
     dropDuplicates.
     """
-    term_keys = [
-        "subj", "pred", "obj_kind", "obj_lex", "obj_datatype", "obj_lang",
-        "graph",
+    keys = [
+        "conv_id", "subj", "pred", "obj_kind", "obj_lex", "obj_datatype",
+        "obj_lang", "graph",
     ]
-    keys = term_keys if global_dedup else ["conv_id"] + term_keys
     if salt_buckets and salt_buckets > 1:
         # the salt must be KEY-INDEPENDENT: a salt derived from the
         # dedup keys gives every copy of a duplicate the SAME salt, so

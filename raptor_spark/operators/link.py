@@ -23,23 +23,19 @@ from raptor_spark.sources.transcripts import CUST_NS
 MENTION_PATTERN = re.escape(CUST_NS) + r"(\d+)"
 
 
-def detect_mentions(
-    transcripts: DataFrame, pattern: str = MENTION_PATTERN
-) -> DataFrame:
+def detect_mentions(transcripts: DataFrame) -> DataFrame:
     """(conv_id, key) — one row per mention occurrence in turn text."""
     return transcripts.select(
         "conv_id",
         F.explode(
-            F.regexp_extract_all(F.col("text"), F.lit(pattern), F.lit(1))
+            F.regexp_extract_all(
+                F.col("text"), F.lit(MENTION_PATTERN), F.lit(1)
+            )
         ).alias("key"),
     )
 
 
-def link_entities(
-    transcripts: DataFrame,
-    entities: DataFrame,
-    pattern: str = MENTION_PATTERN,
-) -> DataFrame:
+def link_entities(transcripts: DataFrame, entities: DataFrame) -> DataFrame:
     """Best entity per conversation: (conv_id, entity_uri, mentions).
 
     ``entities`` must have columns (key, entity_uri) and be small enough
@@ -52,7 +48,7 @@ def link_entities(
     would force a second full shuffle plus a sort.
     """
     cand = (
-        detect_mentions(transcripts, pattern)
+        detect_mentions(transcripts)
         .join(F.broadcast(entities), "key")
         .groupBy("conv_id", "entity_uri")
         .agg(F.count(F.lit(1)).cast("long").alias("mentions"))

@@ -217,8 +217,8 @@ _TRIPLE_STRUCT = ("subj", "pred", "obj_kind", "obj_lex", "obj_datatype",
                   "obj_lang", "graph")
 
 
-def _grouped_triples(triples: DataFrame, group_col: str) -> DataFrame:
-    """(group, ts: array<struct>) — one row per document group. The
+def _grouped_triples(triples: DataFrame) -> DataFrame:
+    """(conv_id, ts: array<struct>) — one row per conversation. The
     buffered writers consume this instead of applyInPandas-per-key:
     at corpus scale the per-key pandas-frame + function-call overhead
     (one invocation per conversation) dominates the actual writer
@@ -226,10 +226,10 @@ def _grouped_triples(triples: DataFrame, group_col: str) -> DataFrame:
     per Arrow batch with the SAME single shuffle."""
     return (
         triples.select(
-            group_col,
+            "conv_id",
             F.struct(*_TRIPLE_STRUCT).alias("t"),
         )
-        .groupBy(group_col)
+        .groupBy("conv_id")
         .agg(F.collect_list("t").alias("ts"))
     )
 
@@ -260,9 +260,7 @@ def _batch_triple_lists(rb):
     return groups, tls
 
 
-def _writer_stage(
-    triples: DataFrame, group_col: str, out_fields, per_group
-) -> DataFrame:
+def _writer_stage(triples: DataFrame, out_fields, per_group) -> DataFrame:
     """Shared buffered-writer stage: ONE shuffle (the collect_list
     grouping) then a map-only mapInArrow stage that extracts each batch
     columnar (see _batch_triple_lists) and applies ``per_group`` to every
@@ -270,9 +268,8 @@ def _writer_stage(
     for the produced columns after the group key."""
     import pyarrow as pa
 
-    out_schema = "%s string, %s" % (
-        group_col,
-        ", ".join("%s %s" % (n, s) for n, _t, s in out_fields),
+    out_schema = "conv_id string, " + ", ".join(
+        "%s %s" % (n, s) for n, _t, s in out_fields
     )
     pa_types = [pa.string()] + [t for _n, t, _s in out_fields]
 
@@ -289,26 +286,25 @@ def _writer_stage(
             else:
                 arrays.append(pa.array(res, pa_types[1]))
             yield pa.RecordBatch.from_arrays(
-                arrays, names=[group_col] + [n for n, _t, _s in out_fields]
+                arrays, names=["conv_id"] + [n for n, _t, _s in out_fields]
             )
 
-    return _grouped_triples(triples, group_col).mapInArrow(
+    return _grouped_triples(triples).mapInArrow(
         run, schema=out_schema
     )
 
 
-def serialize_documents(
-    triples: DataFrame, fmt: str, group_col: str = "conv_id"
-) -> DataFrame:
-    """(group, triples...) -> (group, payload): one serialized document
-    per group via the buffered writer kernels. One shuffle (the group
-    aggregation), then a map-only Arrow stage that runs the writer for
-    thousands of groups per batch (see _writer_stage)."""
+def serialize_documents(triples: DataFrame, fmt: str) -> DataFrame:
+    """(conv_id, triples...) -> (conv_id, payload): one serialized
+    document per conversation via the buffered writer kernels. One
+    shuffle (the group aggregation), then a map-only Arrow stage that
+    runs the writer for thousands of groups per batch (see
+    _writer_stage)."""
     import pyarrow as pa
 
     writer = _WRITERS[fmt]
     return _writer_stage(
-        triples, group_col, [("payload", pa.string(), "string")], writer
+        triples, [("payload", pa.string(), "string")], writer
     )
 
 
@@ -346,9 +342,7 @@ def _roundtrip_count(doc: str, fmt: str) -> int:
     return -1 if errs else len(set(back))
 
 
-def rss10_roundtrip_stats(
-    triples: DataFrame, group_col: str = "conv_id"
-) -> DataFrame:
+def rss10_roundtrip_stats(triples: DataFrame) -> DataFrame:
     """Serialize each feed graph as RSS 1.0 (kernel/atom.py
     Rss10Serializer, the is_atom==0 mode of src/raptor_serialize_rss.c),
     reparse with the rss-tag-soup kernel, and report whether the
@@ -378,7 +372,6 @@ def rss10_roundtrip_stats(
 
     return _writer_stage(
         triples,
-        group_col,
         [
             ("n_in", pa.int64(), "long"),
             ("n_out", pa.int64(), "long"),
@@ -388,11 +381,9 @@ def rss10_roundtrip_stats(
     )
 
 
-def serialize_bytes(
-    triples: DataFrame, fmt: str = "turtle", group_col: str = "conv_id"
-) -> DataFrame:
-    """WRITER-ONLY stage: serialize each group in ``fmt`` and return
-    (group, n_bytes) — same shuffle + batched Arrow stage as
+def serialize_bytes(triples: DataFrame, fmt: str = "turtle") -> DataFrame:
+    """WRITER-ONLY stage: serialize each conversation in ``fmt`` and
+    return (conv_id, n_bytes) — same shuffle + batched Arrow stage as
     serialize_roundtrip_counts but WITHOUT the verification reparse.
     The bench times this separately so serializer regressions are
     visible apart from the (roughly equal-cost) roundtrip harness."""
@@ -401,26 +392,22 @@ def serialize_bytes(
     writer = _WRITERS[fmt]
     return _writer_stage(
         triples,
-        group_col,
         [("n_bytes", pa.int64(), "long")],
         lambda tl: len(writer(tl).encode("utf-8")),
     )
 
 
-def serialize_roundtrip_counts(
-    triples: DataFrame, fmt: str = "trig", group_col: str = "conv_id"
-) -> DataFrame:
-    """Serialize each group in ``fmt``, reparse (or structurally count),
-    count statements — the distributed form of the reference's
+def serialize_roundtrip_counts(triples: DataFrame, fmt: str) -> DataFrame:
+    """Serialize each conversation in ``fmt``, reparse (or structurally
+    count), count statements — the distributed form of the reference's
     check-turtle-serialize harness (rapper -o <fmt> | rdfdiff). Returns
-    (group, n_triples); a relational oracle over the source tables pins
-    the expected count per group."""
+    (conv_id, n_triples); a relational oracle over the source tables
+    pins the expected count per conversation."""
     import pyarrow as pa
 
     writer = _WRITERS[fmt]
     return _writer_stage(
         triples,
-        group_col,
         [("n_triples", pa.int64(), "long")],
         lambda tl: _roundtrip_count(writer(tl), fmt),
     )

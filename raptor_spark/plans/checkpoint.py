@@ -54,8 +54,9 @@ def with_bucket(df: DataFrame, n_buckets: int, bucket_fn=None) -> DataFrame:
     """Deterministic conv_id -> bucket assignment. Default is xxhash64
     (cheap, JVM-side, well-mixed at 10^12 keys); ``bucket_fn(col_expr,
     n_buckets) -> Column`` overrides it — e.g. an md5-derived bucket the
-    DuckDB oracle can reconstruct relationally (queries.resumable_manifest).
-    The resume machinery only needs determinism across runs."""
+    DuckDB oracle can reconstruct relationally
+    (queries.kg.q_resumable_manifest). The resume machinery only needs
+    determinism across runs."""
     if bucket_fn is None:
         expr = F.pmod(F.xxhash64(F.col("conv_id")), F.lit(n_buckets)).cast("int")
     else:
@@ -71,6 +72,24 @@ def overwrite_partitions(df: DataFrame, path: str, col: str) -> None:
     df.write.mode("overwrite").option(
         "partitionOverwriteMode", "dynamic"
     ).partitionBy(col).parquet(path)
+
+
+def replace_buckets(
+    df: DataFrame, out_dir: str, sub: str, buckets: list
+) -> None:
+    """Write the bucket-partitioned ``df`` under ``out_dir/sub`` so that
+    the partitions of ``buckets`` (the ones the run owns) hold exactly
+    its rows. Dynamic partition overwrite alone cannot clear a partition
+    the write carries ZERO rows into, so those directories are deleted
+    first and a crashed predecessor's stale rows cannot survive (round-6
+    ADVICE fix). Only a missing directory is ignored there."""
+    local = local_dir(out_dir)
+    for bkt in buckets:
+        try:
+            shutil.rmtree(os.path.join(local, sub, "bucket=%s" % bkt))
+        except FileNotFoundError:
+            pass
+    overwrite_partitions(df, os.path.join(out_dir, sub), "bucket")
 
 
 def finished_buckets(spark: SparkSession, out_dir: str) -> Optional[DataFrame]:
@@ -157,19 +176,15 @@ def write_bucketed(
     run only carries unfinished buckets, so replacing exactly the
     partitions it writes makes a crash-replay idempotent — a run that
     died AFTER appending bucket data but BEFORE its manifest row would
-    otherwise leave a duplicate copy under the bucket on resume. Dynamic
-    overwrite alone cannot clear a partition the replay writes ZERO rows
-    into, so the partition directories of the buckets ``turns`` owns are
-    deleted up front — a bucket whose conversations all legitimately
-    parse to zero triples then lands clean instead of surfacing a
-    crashed predecessor's stale rows (round-6 ADVICE fix). Only a
-    missing directory is ignored there; any other OSError propagates.
-    The manifest itself stays append-only — readers aggregate it per
-    bucket.
+    otherwise leave a duplicate copy under the bucket on resume; the
+    buckets ``turns`` owns are pre-cleared first (replace_buckets), so a
+    bucket whose conversations all parse to zero triples lands clean
+    too. The manifest itself stays append-only — readers aggregate it
+    per bucket.
     """
     from pyspark.storagelevel import StorageLevel
 
-    local = local_dir(out_dir)
+    local_dir(out_dir)  # refuse a non-local out_dir before any job
     # every input is bucketed here, by the one with_bucket rule: the
     # triples, errors and links carry no bucket column, and turns need
     # only conv_id. The bucket run_resumable's turns already carry is the
@@ -188,12 +203,7 @@ def write_bucketed(
     try:
         owned = [r["bucket"] for r in u.select("bucket").distinct().collect()]
         for sub, df in tables.items():
-            for bkt in owned:
-                try:
-                    shutil.rmtree(os.path.join(local, sub, "bucket=%s" % bkt))
-                except FileNotFoundError:
-                    pass
-            overwrite_partitions(df, os.path.join(out_dir, sub), "bucket")
+            replace_buckets(df, out_dir, sub, owned)
         manifest = (
             manifest_counts(u, tables)
             .withColumn("linked", F.lit(links is not None))
@@ -257,15 +267,18 @@ def link_catchup(
     entity linking (resuming an out_dir first written without entities
     must not leave links/ silently incomplete). Restricts the input to
     the finished-but-unlinked buckets, runs only ``link_fn`` (no parse,
-    no triple rewrite), appends links/bucket= and linked=true manifest
-    rows whose other counters stay null (that work did not run here).
-    Returns the appended manifest rows, or None when every finished
-    bucket is already linked."""
+    no triple rewrite), replaces those buckets' links/bucket= partitions
+    (pre-cleared like write_bucketed's, so rows a crashed catch-up left
+    behind cannot outlive a relink that writes none) and appends
+    linked=true manifest rows whose other counters stay null (that work
+    did not run here). Returns the appended manifest rows, or None when
+    every finished bucket is already linked."""
     fin = finished_buckets(spark, out_dir)
     if fin is None:
         return None
     unlinked = fin.filter(~F.col("linked")).select("bucket")
-    if not unlinked.take(1):
+    owned = [r["bucket"] for r in unlinked.collect()]
+    if not owned:
         return None
     todo = with_bucket(transcripts, n_buckets, bucket_fn=bucket_fn).join(
         F.broadcast(unlinked), "bucket", "left_semi"
@@ -279,7 +292,7 @@ def link_catchup(
         link_fn(todo.drop("bucket"), entities), n_buckets, bucket_fn=bucket_fn
     ).persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        overwrite_partitions(lk, os.path.join(out_dir, "links"), "bucket")
+        replace_buckets(lk, out_dir, "links", owned)
         null_long = F.lit(None).cast("long")
         man = (
             unlinked.join(

@@ -48,7 +48,7 @@ import pandas as pd
 
 #: Versions the STREAMING semantics (gap logic, trigger/timeout rules,
 #: assembler behavior). Bump on any change here so cached drained
-#: outputs (queries.q_kg_stream_incremental keys its /tmp dir on this)
+#: outputs (queries.kg.q_kg_stream_incremental keys its /tmp dir on this)
 #: are invalidated — GEN/GRAPH_VERSION only cover synthesis and the
 #: batch parse path, not this module.
 STREAM_VERSION = 2
@@ -177,13 +177,13 @@ def stream_incremental_kg(
     out_dir: str,
     gap_seconds: int = 600,
     max_files_per_trigger: int = 1,
-    await_termination: bool = True,
     watermark_delay_seconds: Optional[int] = None,
 ):
     """Stateful streaming: buffer each conversation's turns until its
     event-time gap elapses (per the watermark), then parse and append the
-    triples. Drains with Trigger.AvailableNow; re-running after new files
-    land resumes from the checkpointed state.
+    triples. Drains with Trigger.AvailableNow and returns the terminated
+    StreamingQuery; re-running after new files land resumes from the
+    checkpointed state.
 
     ``watermark_delay_seconds`` defaults to ``gap_seconds`` (a live
     stream in rough event-time order); widen it to the input's
@@ -227,8 +227,7 @@ def stream_incremental_kg(
         .trigger(availableNow=True)
         .start()
     )
-    if await_termination:
-        q.awaitTermination()
+    q.awaitTermination()
     return q
 
 

@@ -23,11 +23,7 @@ from pyspark.storagelevel import StorageLevel
 
 from raptor_spark.pipeline import parse_transcripts, split_parsed
 from raptor_spark.plans.checkpoint import overwrite_partitions
-
-TRANSCRIPT_SCHEMA = (
-    "conv_id string, turn_idx int, role string, text string, tool string, "
-    "ts timestamp"
-)
+from raptor_spark.streaming.incremental import TRANSCRIPT_SCHEMA
 
 
 def stream_build_graph(spark: SparkSession, transcripts_path: str, out_dir: str):

@@ -17,7 +17,7 @@ def _pairs(df):
 
 
 def test_ann_topk_recall_vs_brute_force(spark):
-    from raptor_spark.queries import q_ann_topk, q_embedding_topk
+    from raptor_spark.queries.ann import q_ann_topk, q_embedding_topk
 
     exact = _pairs(q_embedding_topk(spark, SF_DIR))
     approx = _pairs(q_ann_topk(spark, SF_DIR))
@@ -39,7 +39,7 @@ def test_ann_topk_recall_at_64plus_cells(spark, tmp_path):
     vec_id < 8 unchanged) so N ~ 6400 -> ~80 cells."""
     import pyspark.sql.functions as F
 
-    from raptor_spark.queries import (
+    from raptor_spark.queries.ann import (
         _ivf_params,
         q_ann_topk,
         q_embedding_topk,
@@ -69,7 +69,7 @@ def test_ann_topk_recall_at_64plus_cells(spark, tmp_path):
 
 
 def test_ann_lsh_candidate_space_subquadratic(spark):
-    from raptor_spark.queries import q_ann_lsh
+    from raptor_spark.queries.ann import q_ann_lsh
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     n = emb.count()
@@ -85,7 +85,7 @@ def test_simhash_pairs_are_near_duplicates(spark):
     """Hamming <= 3 SimHash pairs must be textually close: verify every
     reported pair also clears 0.5 word-3-gram Jaccard (the cascade's
     exact verifier) — SimHash is a coarser filter over the same corpus."""
-    from raptor_spark.queries import q_dedup_cascade, q_dedup_simhash
+    from raptor_spark.queries.dedup import q_dedup_cascade, q_dedup_simhash
 
     sim = {(r.doc_a, r.doc_b) for r in q_dedup_simhash(spark, SF_DIR).collect()}
     jac = {(r.doc_a, r.doc_b) for r in q_dedup_cascade(spark, SF_DIR).collect()}
@@ -107,7 +107,7 @@ def test_shingles_short_doc_parity_with_oracle(spark):
 
     from pyspark.sql import functions as F
 
-    from raptor_spark.queries import _shingles
+    from raptor_spark.queries.dedup import _shingles
 
     docs = [
         (1, "one"),

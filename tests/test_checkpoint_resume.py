@@ -232,6 +232,40 @@ def test_zero_row_replay_clears_stale_bucket_data(
     )
 
 
+def test_zero_row_link_catchup_clears_stale_links(
+    spark, transcripts, mention_entities, tmp_path_factory
+):
+    """A link catch-up that crashed after its links write but before its
+    manifest append leaves rows under links/bucket=; a rerun that relinks
+    with a changed entity dictionary and writes zero rows must not let
+    them survive next to a manifest recording link_decisions = 0."""
+    import glob
+    import os
+
+    from raptor_spark.operators.link import link_entities
+    from raptor_spark.pipeline import run_resumable
+    from raptor_spark.plans import checkpoint as ckpt
+
+    out = str(tmp_path_factory.mktemp("zero_catchup"))
+    run_resumable(spark, transcripts, out, n_buckets=4)
+    # the crashed catch-up: its links landed, its manifest rows did not
+    ckpt.overwrite_partitions(
+        ckpt.with_bucket(link_entities(transcripts, mention_entities), 4),
+        os.path.join(out, "links"),
+        "bucket",
+    )
+    assert glob.glob(os.path.join(out, "links", "bucket=*"))
+    man = ckpt.link_catchup(
+        spark, transcripts, out, 4, mention_entities.filter("1 = 0"),
+        link_fn=link_entities,
+    )
+    rows = man.collect()
+    assert rows and all(r.linked and r.link_decisions == 0 for r in rows)
+    assert not glob.glob(os.path.join(out, "links", "bucket=*")), (
+        "a crashed catch-up's links survived a zero-row relink"
+    )
+
+
 @pytest.mark.parametrize(
     "uri", ["s3a://bucket/kg", "hdfs://nn:8020/kg", "file://otherhost/kg"]
 )

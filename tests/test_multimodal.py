@@ -33,14 +33,14 @@ def test_decode_metadata_deterministic(media):
 
 def test_real_codec_gate(media):
     with pytest.raises(Exception) as ei:
-        MM.decode_media(media, use_real_codec=True).collect()
+        MM.decode_media(media, codec="real").collect()
     assert "NotImplementedError" in str(ei.value) or isinstance(
         ei.value, NotImplementedError
     )
 
 
 def test_real_codec_wiring(media, monkeypatch):
-    # the use_real_codec flag must route every row through _decode_real —
+    # codec="real" must route every row through _decode_real —
     # proven with a fake codec so the stub can never silently diverge
     # from the real path's shape
     calls = {"n": 0}
@@ -50,7 +50,7 @@ def test_real_codec_wiring(media, monkeypatch):
         return {"width": 640, "height": 480, "channels": 4}
 
     monkeypatch.setattr(MM, "_decode_real", fake)
-    rows = MM.decode_media(media.limit(20), use_real_codec=True).collect()
+    rows = MM.decode_media(media.limit(20), codec="real").collect()
     assert rows and all(
         (r.width, r.height, r.channels) == (640, 480, 4) for r in rows
     )
@@ -68,7 +68,7 @@ def test_real_codec_pil_integration(spark):
         [(1, "image", bytearray(buf.getvalue()), len(buf.getvalue()))],
         "doc_id bigint, media_type string, payload binary, byte_len int",
     )
-    row = MM.decode_media(media, use_real_codec=True).collect()[0]
+    row = MM.decode_media(media, codec="real").collect()[0]
     assert (row.width, row.height, row.channels) == (17, 9, 3)
     del PIL
 

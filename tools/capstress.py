@@ -5,8 +5,9 @@ cap — LSH band-bucket cap (_LSH_BUCKET_CAP), shingle document-frequency
 cap (_SHINGLE_DF_CAP), embedding bucket cap (_EMB_BUCKET_CAP) — so the
 candidate-pair space must stay sub-quadratic as N grows. This tool
 measures that directly: it runs the SAME signature/bucket pipelines the
-production queries use (the *_uncapped helpers in queries.py) on the
-base corpus and on an 8x-replicated copy, and reports per scale:
+production queries use (the *_uncapped helpers in
+raptor_spark/queries/dedup.py) on the base corpus and on an 8x-replicated
+copy, and reports per scale:
 
 - bucket/DF histograms: how many buckets (or shingles) crossed the cap
   and how many candidate pairs the cap REMOVED,
@@ -82,14 +83,15 @@ def _pairsum(df, size_col):
 def measure(spark, sf_dir: str) -> dict:
     from pyspark.sql import functions as F
 
-    from raptor_spark.queries import (
+    from raptor_spark.queries.ann import q_ann_lsh
+    from raptor_spark.queries.dedup import (
         _EMB_BUCKET_CAP,
         _LSH_BUCKET_CAP,
         _SHINGLE_DF_CAP,
-        QUERIES,
         _emb_lsh_buckets_uncapped,
         _minhash_bands_uncapped,
         _shingles,
+        q_dedup_minhash,
     )
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -122,7 +124,7 @@ def measure(spark, sf_dir: str) -> dict:
         "buckets_over_cap": dropped.count(),
         "candidate_pairs_kept": int(_pairsum(kept, "count")),
         "candidate_pairs_capped_away": int(_pairsum(dropped, "count")),
-        "distinct_candidates": QUERIES["dedup_minhash"](spark, sf_dir).count(),
+        "distinct_candidates": q_dedup_minhash(spark, sf_dir).count(),
     }
 
     # --- shingle inverted index (jaccard) ------------------------------
@@ -155,7 +157,7 @@ def measure(spark, sf_dir: str) -> dict:
 
     # --- IVF/ANN LSH diagnostic query (reports its own candidate space)
     out["ann_lsh_candidate_pairs"] = sum(
-        r.candidate_pairs for r in QUERIES["ann_lsh"](spark, sf_dir).collect()
+        r.candidate_pairs for r in q_ann_lsh(spark, sf_dir).collect()
     )
 
     # headline ratios
